@@ -27,8 +27,7 @@ object Demo {
         s"refusing to delete $outDir: it is non-empty and carries no " +
           "_manifest_*.json marker, so it was not written by this demo — " +
           "pass a fresh or demo-owned output dir")
-      java.nio.file.Files.walk(outPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+      graft.io.EpochStore.deleteTree(outPath)
     }
   }
 

@@ -1,7 +1,6 @@
 package graft.io
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
+import java.nio.file.{Files, Path, Paths}
 
 /** Versioned model roots: the crash-safe publication layout the served
   * probe and LM models retrain under.
@@ -11,7 +10,7 @@ import java.util.Comparator
   * directory before the rewrite commits, so a crash (or a concurrent
   * reader) mid-retrain sees a torn model. The serving tables solved the
   * same problem with staged rewrites behind an atomic marker
-  * (`CellsMaintenance`, `Snapshots.compact`); models get the simpler
+  * (`EpochStore`, `Snapshots.compact`); models get the simpler
   * warehouse idiom, the version pointer: each (re)train writes a COMPLETE
   * new model under `root/v<n>` and then publishes `root/CURRENT`
   * containing `n` via write-temp + ATOMIC_MOVE. Readers dereference
@@ -54,16 +53,11 @@ object Models {
     (n, s"$root/v$n")
   }
 
-  /** Atomically move the pointer: write-temp + ATOMIC_MOVE, the same
-    * protocol as the compaction markers. After this returns, every
+  /** Atomically move the pointer (`EpochStore.publish`, the same
+    * protocol as the compaction markers). After this returns, every
     * subsequent open sees version `n` complete. */
-  def publish(root: String, n: Long): Unit = {
-    Files.createDirectories(Paths.get(root))
-    val tmp = Paths.get(root, "CURRENT.tmp")
-    Files.writeString(tmp, n.toString)
-    Files.move(tmp, pointer(root), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  def publish(root: String, n: Long): Unit =
+    EpochStore.publish(pointer(root), n.toString)
 
   /** Drop every non-current version directory (superseded models and
     * crashed-attempt residue). Returns the pruned version numbers —
@@ -80,11 +74,7 @@ object Models {
         p.getFileName.toString.drop(1).toLong
     }
     val stale = vs.filter(_ != cur).sorted
-    stale.foreach { v =>
-      Files.walk(Paths.get(root, s"v$v"))
-        .sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.delete(p))
-    }
+    stale.foreach(v => EpochStore.deleteTree(Paths.get(root, s"v$v")))
     stale
   }
 
@@ -98,9 +88,7 @@ object Models {
     Files.deleteIfExists(Paths.get(root, "CURRENT.tmp"))
     Files.list(dir).toArray.toSeq.foreach {
       case p: Path if Files.isDirectory(p) &&
-        p.getFileName.toString.matches("v\\d+") =>
-        Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-          .forEach(q => Files.delete(q))
+        p.getFileName.toString.matches("v\\d+") => EpochStore.deleteTree(p)
       case _ => ()
     }
   }

@@ -197,9 +197,8 @@ object Snapshots {
               files: Int = 1): String =
     compactImpl(spark, outDir, upToId, files, crashBeforeSwap = false)
 
-  /** `crashBeforeSwap` is a test seam: throw after the `_compact_pending`
-    * protocol file is published but before the swap runs — the worst-case
-    * crash point the recovery path must finish. */
+  /** `crashBeforeSwap`: the test seam of `EpochStore.publish`, hit after
+    * the `_compact_pending` protocol file is published. */
   private[graft] def compactImpl(spark: SparkSession, outDir: String,
                                  upToId: String, files: Int,
                                  crashBeforeSwap: Boolean): String = {
@@ -231,10 +230,7 @@ object Snapshots {
         .write.mode("overwrite").parquet(tmp.toString)
       val dest = Paths.get(outDir, tbl, s"snapshot_id=$compactId")
       Files.createDirectories(dest.getParent)
-      if (Files.exists(dest)) {
-        Files.walk(dest).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { Files.deleteIfExists(p); () })
-      }
+      EpochStore.deleteTree(dest)
       Files.move(tmp, dest)
       ()
     }
@@ -265,16 +261,11 @@ object Snapshots {
     val manifest =
       s"""{"snapshot_id":"$compactId","docs_ok":${r.getLong(0)},"docs_err":${r.getLong(1)},"spans_seen":${r.getLong(2)},"seq":${target.seq}}"""
     // recoverable swap protocol: manifest line, folded ids, folded seqs —
-    // published ATOMICALLY (temp + move) so a crash mid-write can never
-    // leave a half-written protocol file for recovery to trip over
-    val pendingTmp = Paths.get(outDir, "_compact_pending.tmp")
-    Files.writeString(pendingTmp,
+    // published ATOMICALLY so a crash mid-write can never leave a
+    // half-written protocol file for recovery to trip over
+    EpochStore.publish(Paths.get(outDir, EpochStore.Marker),
       manifest + "\n" + folded.map(_.snapshotId).mkString(",") + "\n" +
-        folded.map(_.seq).mkString(","))
-    Files.move(pendingTmp, Paths.get(outDir, "_compact_pending"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    if (crashBeforeSwap)
-      throw new IllegalStateException("test crash seam: before manifest swap")
+        folded.map(_.seq).mkString(","), crashBeforeSwap)
     finishPendingCompact(outDir)
     compactId
   }
@@ -284,7 +275,7 @@ object Snapshots {
     * baseline's seq, publish its manifest, drop the pending file, then
     * delete the folded data partitions. Every step is idempotent. */
   private def finishPendingCompact(outDir: String): Unit = {
-    val pending = Paths.get(outDir, "_compact_pending")
+    val pending = Paths.get(outDir, EpochStore.Marker)
     if (!Files.exists(pending)) return
     val Array(manifest, idsLine, seqsLine) =
       Files.readString(pending).split("\n", 3)
@@ -299,12 +290,7 @@ object Snapshots {
     Files.writeString(Paths.get(outDir, s"_seq_$seqStr"), compactId)
     Files.writeString(Paths.get(outDir, s"_manifest_$compactId.json"), manifest)
     Files.deleteIfExists(pending)
-    for (tbl <- Seq("contracts", "lineage"); id <- foldedIds) {
-      val dir = Paths.get(outDir, tbl, s"snapshot_id=$id")
-      if (Files.exists(dir)) {
-        Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { Files.deleteIfExists(p); () })
-      }
-    }
+    for (tbl <- Seq("contracts", "lineage"); id <- foldedIds)
+      EpochStore.deleteTree(Paths.get(outDir, tbl, s"snapshot_id=$id"))
   }
 }

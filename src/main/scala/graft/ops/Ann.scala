@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.EpochStore
 
 /** Approximate-nearest-neighbor search over an `array<float>` embedding
   * column. Brute-force cosine is the correctness baseline; the LSH
@@ -47,143 +48,12 @@ object Ann {
       .map(_.getSeq[Float](0).toArray.map(_.toDouble))
   }
 
-  /** Shared maintenance for the (cell, epoch)-partitioned `cells/` layout
-    * both served index families write (IVF vectors, IVF-PQ codes): fold
-    * the epochs ingestion accumulated into ONE baseline partition per
-    * cell. Every append lands at least one file per touched cell, so at
-    * shard-per-hour ingestion each cell becomes thousands of small files;
-    * compaction rewrites the directory with all rows under baseline epoch
-    * = the max folded epoch id — probes prune on the unchanged top-level
-    * cell directories, answers are byte-identical (spec-pinned).
-    *
-    * Replay interlock: `_max_folded` beside the data records the fold
-    * point, and the append paths refuse an epoch at or below it — a
-    * replayed ingest of a folded epoch would otherwise dynamically
-    * overwrite baseline partitions with just the shard (compact only
-    * while ingestion is quiescent; committed-batch replays are the last
-    * batch only, and that is exactly the loud case).
-    *
-    * Crash safety: the staged rewrite is invisible (`cells_stage`), an
-    * atomically-published `_compact_pending` marker makes the directory
-    * swap recoverable, and open paths finish a crashed swap.
-    *
-    * Single-writer contract: one LIVE writer per table path (appends AND
-    * compaction) — the streaming checkpoint enforces the one owner in
-    * deployment. Epoch idempotence covers crashed-writer replays, not
-    * two concurrent lives (see Dedup.appendToMinhashIndex). */
-  private[graft] object CellsMaintenance {
-
-    /** One epoch-partitioned dataset under an index root: its directory
-      * name, partition columns (epoch last), and how its rows fold into
-      * the baseline — a relabel for data rows, a re-aggregate for count
-      * rows. */
-    case class EpochDir(dir: String, partitionCols: Seq[String],
-                        fold: (DataFrame, Long) => DataFrame)
-
-    /** Plain data rows: folding just relabels the epoch. */
-    def relabel(dir: String, partitionCols: Seq[String]): EpochDir =
-      EpochDir(dir, partitionCols,
-        (df, b) => df.withColumn("epoch", lit(b)))
-
-    /** The layout both served ANN families share (IVF vectors, IVF-PQ
-      * codes): one `cells/` dataset partitioned (cell, epoch). */
-    val cells: Seq[EpochDir] = Seq(relabel("cells", Seq("cell", "epoch")))
-
-    def maxFolded(path: String): Long = {
-      val f = java.nio.file.Paths.get(path, "_max_folded")
-      if (java.nio.file.Files.exists(f))
-        java.nio.file.Files.readString(f).trim.toLong
-      else -1L
-    }
-
-    def requireAppendable(path: String, epoch: Long,
-                          dirs: Seq[EpochDir] = cells): Unit = {
-      finishPending(path, dirs)
-      val mf = maxFolded(path)
-      require(epoch > mf,
-        s"epoch $epoch was folded by index compaction (max folded: $mf); " +
-          "compact only while ingestion is quiescent")
-    }
-
-    def compact(spark: SparkSession, path: String, crashBeforeSwap: Boolean,
-                dirs: Seq[EpochDir] = cells): Long = {
-      finishPending(path, dirs)
-      // partition-column inference reads `epoch=N` back as INT — cast.
-      // Every dataset must agree on the max epoch: a crash between an
-      // append's paired writes leaves a partial epoch, and folding it
-      // would bake the inconsistency into the baseline forever — the
-      // interrupted ingest must be replayed (idempotent) first.
-      val maxes = dirs.map(d => spark.read.parquet(s"$path/${d.dir}")
-        .agg(max(col("epoch").cast("long"))).head().getLong(0))
-      require(maxes.distinct.size == 1,
-        s"partial epoch across ${dirs.map(_.dir).mkString(", ")} " +
-          s"(max epochs: ${maxes.mkString(", ")}); replay the interrupted " +
-          "ingest before compacting")
-      val baseline = maxes.head
-      if (baseline <= math.max(0L, maxFolded(path))) return maxFolded(path)
-      dirs.foreach { d =>
-        d.fold(spark.read.parquet(s"$path/${d.dir}"), baseline)
-          .write.partitionBy(d.partitionCols: _*).mode("overwrite")
-          .parquet(s"$path/${d.dir}_stage")
-      }
-      val marker = java.nio.file.Paths.get(path, "_compact_pending")
-      val tmp = java.nio.file.Paths.get(path, "_compact_pending.tmp")
-      java.nio.file.Files.writeString(tmp, baseline.toString)
-      java.nio.file.Files.move(tmp, marker,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      if (crashBeforeSwap)
-        throw new IllegalStateException("test crash seam: before cells swap")
-      finishPending(path, dirs)
-      baseline
-    }
-
-    /** A REBUILD starts maintenance history over: drop the fold point, a
-      * pending marker, and any staged rewrite — otherwise the fresh index
-      * would refuse early epochs or resurrect a dead stage over new
-      * data. Called by the write paths before the base write. */
-    def reset(path: String, dirs: Seq[EpochDir] = cells): Unit = {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(path, "_max_folded"))
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(path, "_compact_pending"))
-      dirs.foreach { d =>
-        val stage = java.nio.file.Paths.get(path, s"${d.dir}_stage")
-        if (java.nio.file.Files.exists(stage)) {
-          java.nio.file.Files.walk(stage)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(q => { java.nio.file.Files.deleteIfExists(q); () })
-        }
-      }
-    }
-
-    /** Finish a compaction swap: retire each live dataset dir, promote
-      * its stage, record the fold point, clear the marker. Idempotent —
-      * a missing stage means that dataset's swap already happened. */
-    def finishPending(path: String, dirs: Seq[EpochDir] = cells): Unit = {
-      val marker = java.nio.file.Paths.get(path, "_compact_pending")
-      if (!java.nio.file.Files.exists(marker)) return
-      val baseline = java.nio.file.Files.readString(marker).trim.toLong
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(q => { java.nio.file.Files.deleteIfExists(q); () })
-        }
-      dirs.foreach { d =>
-        val live = java.nio.file.Paths.get(path, d.dir)
-        val stage = java.nio.file.Paths.get(path, s"${d.dir}_stage")
-        if (java.nio.file.Files.exists(stage)) {
-          rmTree(live)
-          java.nio.file.Files.move(stage, live)
-        }
-      }
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(path, "_max_folded"), baseline.toString)
-      java.nio.file.Files.deleteIfExists(marker)
-      ()
-    }
-  }
+  /** The epoch store of the (cell, epoch)-partitioned `cells/` layout
+    * both served index families write (IVF vectors, IVF-PQ codes):
+    * compaction folds each cell's epochs into ONE baseline partition —
+    * probes prune on the unchanged top-level cell directories. */
+  private[graft] def cellsStore(spark: SparkSession, path: String): EpochStore =
+    EpochStore.dirs(spark, path, Seq(EpochStore.relabel("cells", Seq("cell", "epoch"))))
 
   /** Brute-force top-k for one query vector (broadcast the 1-row query). */
   def bruteForceTopK(embeddings: DataFrame, idCol: String, vecCol: String,
@@ -350,7 +220,7 @@ object Ann {
     def writeIndex(index: Index, path: String): Unit = {
       val spark = index.assigned.sparkSession
       import spark.implicits._
-      CellsMaintenance.reset(path)
+      cellsStore(spark, path).reset()
       index.assigned.withColumn("epoch", lit(0L))
         .write.partitionBy("cell", "epoch").mode("overwrite")
         .parquet(s"$path/cells")
@@ -382,7 +252,7 @@ object Ann {
     def appendToIndex(spark: SparkSession, path: String, newVecs: DataFrame,
                       vecCol: String, epoch: Long): Unit = {
       require(epoch > 0L, s"epoch must be positive (0 is the base build): $epoch")
-      CellsMaintenance.requireAppendable(path, epoch)
+      cellsStore(spark, path).requireUnfolded(epoch)
       assign(newVecs, vecCol, readCentroids(spark, path))
         .withColumn("epoch", lit(epoch))
         .write.partitionBy("cell", "epoch")
@@ -397,10 +267,10 @@ object Ann {
         .agg(count("*").as("n_rows")).orderBy("cell")
 
     /** Fold the index's ingestion epochs into one baseline partition per
-      * cell (see `CellsMaintenance` for the contract). Returns the
+      * cell (see `EpochStore` for the contract). Returns the
       * baseline epoch id. */
     def compactIndex(spark: SparkSession, path: String): Long =
-      CellsMaintenance.compact(spark, path, crashBeforeSwap = false)
+      cellsStore(spark, path).compact()
 
     /** Reopen a written index. Probing through `topKIndexed` on the result
       * is partition-pruned: the `cell` filter hits the directory layout
@@ -408,7 +278,7 @@ object Ann {
       * ever read — the IvfIndexSpec asserts this on the physical plan. */
     def openIndex(spark: SparkSession, path: String,
                   idCol: String, vecCol: String): Index = {
-      CellsMaintenance.finishPending(path)
+      cellsStore(spark, path).open()
       Index(readCentroids(spark, path),
         spark.read.parquet(s"$path/cells"), idCol, vecCol)
     }
@@ -623,7 +493,7 @@ object Ann {
     def writeIvfPqIndex(index: Ivf.Index, cb: Codebooks, path: String): Unit = {
       val spark = index.assigned.sparkSession
       import spark.implicits._
-      CellsMaintenance.reset(path)
+      cellsStore(spark, path).reset()
       encode(index.assigned, index.vecCol, cb)
         .select(col(index.idCol), col("cell"), col("code"), lit(0L).as("epoch"))
         .write.partitionBy("cell", "epoch").mode("overwrite").parquet(s"$path/cells")
@@ -657,7 +527,7 @@ object Ann {
                            newVecs: DataFrame, idCol: String, vecCol: String,
                            epoch: Long): Unit = {
       require(epoch > 0L, s"epoch must be positive (0 is the base build): $epoch")
-      CellsMaintenance.requireAppendable(path, epoch)
+      cellsStore(spark, path).requireUnfolded(epoch)
       val assigned = Ivf.assign(newVecs, vecCol, Ivf.readCentroids(spark, path))
       encode(assigned, vecCol, readCodebooks(spark, path))
         .select(col(idCol), col("cell"), col("code"), lit(epoch).as("epoch"))
@@ -667,14 +537,14 @@ object Ann {
     }
 
     /** Fold the codes table's ingestion epochs into one baseline partition
-      * per cell (see `CellsMaintenance`). Returns the baseline epoch id. */
+      * per cell (see `EpochStore`). Returns the baseline epoch id. */
     def compactIvfPqIndex(spark: SparkSession, path: String): Long =
-      CellsMaintenance.compact(spark, path, crashBeforeSwap = false)
+      cellsStore(spark, path).compact()
 
     /** Reopen a written IVF-PQ index. */
     def openIvfPqIndex(spark: SparkSession, path: String,
                        idCol: String): IvfPqIndex = {
-      CellsMaintenance.finishPending(path)
+      cellsStore(spark, path).open()
       IvfPqIndex(Ivf.readCentroids(spark, path),
         spark.read.parquet(s"$path/cells"), readCodebooks(spark, path), idCol)
     }
@@ -783,12 +653,14 @@ object Ann {
 
   /** The knn corpus root holds two epoch-partitioned datasets: the bucket
     * rows (relabel on fold) and the per-key counts (re-aggregate on
-    * fold — one row per key in the baseline). */
-  private val knnDirs = Seq(
-    CellsMaintenance.relabel("buckets", Seq("tbl", "bucket", "epoch")),
-    CellsMaintenance.EpochDir("counts", Seq("epoch"),
-      (df, b) => df.groupBy("tbl", "bucket").agg(sum("n").as("n"))
-        .withColumn("epoch", lit(b))))
+    * fold — one row per key in the baseline). An append writes the
+    * buckets first, so the counts are the epoch ledger. */
+  private[graft] def knnStore(spark: SparkSession, path: String): EpochStore =
+    EpochStore.dirs(spark, path, Seq(
+      EpochStore.relabel("buckets", Seq("tbl", "bucket", "epoch")),
+      EpochStore.EpochData("counts", Seq("epoch"),
+        (df, b) => df.groupBy("tbl", "bucket").agg(sum("n").as("n"))
+          .withColumn("epoch", lit(b)))))
 
   /** Write the corpus side of the k-NN join once: OR-table bucket rows
     * laid out `partitionBy(tbl, bucket, epoch)` so a probing batch reads
@@ -803,7 +675,7 @@ object Ann {
                      maxBucket: Int = 10000): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    CellsMaintenance.reset(path, knnDirs)
+    knnStore(spark, path).reset()
     val planeTables = Array.tabulate(nTables)(l => hyperplanes(nBits, dim, 42L + 7919L * l))
     val buckets = bucketsOfUdf(planeTables)
     corpus.select(col(cId).as("cid"), col(cVec).as("cv"))
@@ -831,7 +703,7 @@ object Ann {
                         newCorpus: DataFrame, cId: String, cVec: String,
                         epoch: Long): Unit = {
     require(epoch > 0L, s"epoch must be positive (0 is the base build): $epoch")
-    CellsMaintenance.requireAppendable(path, epoch, knnDirs)
+    knnStore(spark, path).requireUnfolded(epoch)
     val p = spark.read.parquet(s"$path/params").head()
     val (dim, nBits, nTables) = (p.getInt(0), p.getInt(1), p.getInt(2))
     val planeTables = Array.tabulate(nTables)(l => hyperplanes(nBits, dim, 42L + 7919L * l))
@@ -855,14 +727,14 @@ object Ann {
 
   /** Fold the corpus's ingestion epochs into one baseline partition per
     * (tbl, bucket) — and the counts back to one row per key (see
-    * `CellsMaintenance` for the contract). Returns the baseline epoch. */
+    * `EpochStore` for the contract). Returns the baseline epoch. */
   def compactKnnCorpus(spark: SparkSession, path: String): Long =
-    CellsMaintenance.compact(spark, path, crashBeforeSwap = false, knnDirs)
+    knnStore(spark, path).compact()
 
   /** Reopen a written k-NN corpus with the parameters it was built with.
     * Finishes a compaction swap a crashed maintenance run left pending. */
   def openKnnCorpus(spark: SparkSession, path: String): ServedKnnCorpus = {
-    CellsMaintenance.finishPending(path, knnDirs)
+    knnStore(spark, path).open()
     val p = spark.read.parquet(s"$path/params").head()
     ServedKnnCorpus(spark.read.parquet(s"$path/buckets"),
       spark.read.parquet(s"$path/counts"),

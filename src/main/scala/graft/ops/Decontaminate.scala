@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.io.EpochStore
 
 /** Benchmark decontamination: flag corpus documents that share any word
   * n-gram with a benchmark/eval set — the GPT-3 appendix-C / The-Pile
@@ -241,34 +242,13 @@ object Decontaminate {
     * (same layout contract as the served minhash index). */
   final case class GramIndex(grams: DataFrame, n: Int)
 
-  /** The index's table triple plus the compaction stage names a crashed
-    * maintenance run can leave behind. */
-  private def gramIndexTables(table: String): Seq[String] =
-    Seq("", "_params", "_epochs").flatMap(s =>
-      Seq(s"$table$s", s"$table${s}_cstage"))
-
   /** Build the index of an existing corpus ONCE: one gram pass reduced to
     * distinct hashes, written bucketed+sorted by gh. */
   def writeGramIndex(docs: DataFrame, textCol: String,
                      table: String, n: Int = 13, nBuckets: Int = 32): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // true overwrite semantics (same contract as writeMinhashIndex): a
-    // previous session's managed location must not block the rebuild
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    gramIndexTables(table).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(wh, t)
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(loc)
-      }
-    }
-    // a rebuild starts maintenance history over — a stale pending marker
-    // would resurrect a dead stage over the fresh tables
-    java.nio.file.Files.deleteIfExists(gramCompactMarker(spark, table))
+    gramStore(spark, table).reset()
     docs.select(wordsOf(col(textCol)).as("w"))
       .select(explode(array_distinct(gramsFromWords(col("w"), n))).as("gh"))
       .distinct()
@@ -280,6 +260,23 @@ object Decontaminate {
     Seq(Tuple1(0L)).toDF("epoch")
       .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_epochs")
   }
+
+  /** The index's epoch store. An append writes the grams, then its
+    * `_epochs` ledger row. Every accepted shard appends its DISTINCT grams
+    * as an epoch, so at shard-per-hour ingestion the bucketed table
+    * accretes files AND duplicate gh rows (a keeper's gram that was
+    * already in the corpus repeats under the new epoch — harmless to the
+    * set-semantics probes, but paid on every scan forever). Compaction
+    * rewrites the table as ONE distinct-gh baseline, keeping the SAME
+    * bucket spec (the no-shuffle probe layout survives), and collapses the
+    * ledger to the baseline row. */
+  private[graft] def gramStore(spark: org.apache.spark.sql.SparkSession,
+                               table: String): EpochStore =
+    EpochStore.tables(spark, table, Seq(
+      EpochStore.EpochData("", Seq("gh"), (df, b) =>
+        df.select("gh").distinct().withColumn("epoch", lit(b))),
+      EpochStore.EpochData("_epochs", Nil, (df, b) =>
+        df.select(lit(b).as("epoch")).distinct())))
 
   /** Fold an accepted shard's grams in as one epoch — a SHARD-scale gram
     * pass appended into the bucket layout (probes keep streaming the index
@@ -296,12 +293,11 @@ object Decontaminate {
     val spark = shard.sparkSession
     import spark.implicits._
     require(epoch > 0L, s"epoch must be positive (0 is the base build): $epoch")
-    finishPendingGramCompact(spark, table)
-    refreshGramTables(spark, table)
+    val store = gramStore(spark, table)
+    store.open()
     // a folded epoch's grams live on inside the baseline, so its replayed
     // append stays a no-op — set semantics make this exact, not lossy
-    if (epoch <= gramMaxFoldedOf(spark.table(s"${table}_params").head()))
-      return
+    if (epoch <= store.maxFolded) return
     if (spark.table(s"${table}_epochs").filter(col("epoch") === epoch)
         .limit(1).count() > 0) return
     val p = spark.table(s"${table}_params").head()
@@ -316,104 +312,15 @@ object Decontaminate {
       .write.mode("append").format("parquet").saveAsTable(s"${table}_epochs")
   }
 
-  /** Same cross-session staleness hazard as the minhash index: the gram
-    * table is appended to from other sessions (a streaming foreachBatch
-    * runs in a CLONE), and a long-lived session caches a catalog table's
-    * file listing on first touch — probes and the append's replay ledger
-    * must re-list, not trust the cache. */
-  private def refreshGramTables(spark: org.apache.spark.sql.SparkSession,
-                                table: String): Unit =
-    Seq(table, s"${table}_params", s"${table}_epochs").foreach { t =>
-      if (spark.catalog.tableExists(t)) spark.catalog.refreshTable(t)
-    }
-
-  private def gramCompactMarker(spark: org.apache.spark.sql.SparkSession,
-                                table: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-      s"_compact_pending_$table")
-
-  /** Params tables written before gram compaction existed lack the
-    * max_folded_epoch column — read it tolerantly. */
-  private def gramMaxFoldedOf(p: org.apache.spark.sql.Row): Long =
-    if (p.schema.fieldNames.contains("max_folded_epoch"))
-      p.getAs[Long]("max_folded_epoch")
-    else -1L
-
-  /** Gram-index maintenance — the same story as `compactMinhashIndex`:
-    * every accepted shard appends its DISTINCT grams as an epoch, so at
-    * shard-per-hour ingestion the bucketed table accretes files AND
-    * duplicate gh rows (a keeper's gram that was already in the corpus
-    * repeats under the new epoch — harmless to the set-semantics probes,
-    * but paid on every scan forever). Compaction rewrites the table as
-    * ONE distinct-gh baseline under the max folded epoch, keeping the
-    * SAME bucket spec (the no-shuffle probe layout survives), collapses
-    * the epoch ledger to the baseline row, and records the fold point in
-    * the params table. Probes answer byte-identically; a folded epoch
+  /** Gram-index maintenance — the same story as `compactMinhashIndex`
+    * (see `gramStore`). Probes answer byte-identically; a folded epoch
     * can no longer be EXCLUDED (`openGramIndex(excludeEpoch)` refuses it
     * loudly — compact only while ingestion is quiescent), while a folded
     * epoch's replayed APPEND stays a correct no-op (its grams live on in
-    * the baseline).
-    *
-    * Crash safety: stage tables first (invisible), then an atomically-
-    * published marker makes the three-table swap recoverable; open and
-    * append paths finish a crashed swap. */
+    * the baseline). */
   def compactGramIndex(spark: org.apache.spark.sql.SparkSession,
                        table: String): Long =
-    compactGramIndexImpl(spark, table, crashBeforeSwap = false)
-
-  /** `crashBeforeSwap` is a test seam: throw after the marker publishes
-    * but before the swap — the worst crash point recovery must finish. */
-  private[graft] def compactGramIndexImpl(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      crashBeforeSwap: Boolean): Long = {
-    import spark.implicits._
-    finishPendingGramCompact(spark, table)
-    refreshGramTables(spark, table)
-    val p = spark.table(s"${table}_params").head()
-    val (n, nBuckets) = (p.getInt(0), p.getInt(1))
-    val mf = gramMaxFoldedOf(p)
-    val baseline = spark.table(s"${table}_epochs")
-      .agg(max("epoch")).head().getLong(0)
-    if (baseline <= mf) return mf // already compact
-    spark.table(table).select("gh").distinct()
-      .withColumn("epoch", lit(baseline))
-      .write.mode("overwrite").bucketBy(nBuckets, "gh").sortBy("gh")
-      .format("parquet").saveAsTable(s"${table}_cstage")
-    Seq((n, nBuckets, baseline)).toDF("n", "n_buckets", "max_folded_epoch")
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_params_cstage")
-    Seq(Tuple1(baseline)).toDF("epoch")
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_epochs_cstage")
-    val marker = gramCompactMarker(spark, table)
-    val tmp = java.nio.file.Paths.get(marker.toString + ".tmp")
-    java.nio.file.Files.createDirectories(marker.getParent)
-    java.nio.file.Files.writeString(tmp, table)
-    java.nio.file.Files.move(tmp, marker,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    if (crashBeforeSwap)
-      throw new IllegalStateException("test crash seam: before gram swap")
-    finishPendingGramCompact(spark, table)
-    baseline
-  }
-
-  /** Complete a compaction swap (idempotent — a missing stage means that
-    * table's swap already happened). */
-  private def finishPendingGramCompact(
-      spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    val marker = gramCompactMarker(spark, table)
-    if (!java.nio.file.Files.exists(marker)) return
-    for (suffix <- Seq("", "_params", "_epochs")) {
-      val (stage, dest) = (s"$table${suffix}_cstage", s"$table$suffix")
-      if (spark.catalog.tableExists(stage)) {
-        spark.sql(s"DROP TABLE IF EXISTS $dest")
-        spark.sql(s"ALTER TABLE $stage RENAME TO $dest")
-      }
-    }
-    java.nio.file.Files.deleteIfExists(marker)
-    ()
-  }
+    gramStore(spark, table).compact()
 
   /** `excludeEpoch` is the streaming-replay view: gram rows THIS batch's
     * crashed accept may already have appended are filtered out, so a
@@ -424,17 +331,12 @@ object Decontaminate {
   def openGramIndex(spark: org.apache.spark.sql.SparkSession,
                     table: String,
                     excludeEpoch: Option[Long] = None): GramIndex = {
-    finishPendingGramCompact(spark, table)
-    refreshGramTables(spark, table)
-    val p = spark.table(s"${table}_params").head()
-    excludeEpoch.foreach(e => require(e > gramMaxFoldedOf(p),
-      s"excludeEpoch=$e was folded by gram-index compaction " +
-        s"(max_folded_epoch=${gramMaxFoldedOf(p)}); its rows are " +
-        "indistinguishable inside the baseline — compact only while " +
-        "ingestion is quiescent"))
+    val store = gramStore(spark, table)
+    store.open()
+    excludeEpoch.foreach(store.requireUnfolded)
     val g = spark.table(table)
     val gf = excludeEpoch.map(e => g.filter(col("epoch") =!= e)).getOrElse(g)
-    GramIndex(gf.select("gh"), p.getInt(0))
+    GramIndex(gf.select("gh"), spark.table(s"${table}_params").head().getInt(0))
   }
 
   /** `removeDupSpans` for an incoming shard against a WRITTEN gram index —

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.io.EpochStore
 
 /** Deduplication operators for the training-data pipeline, DataFrame-first.
   *
@@ -94,20 +95,7 @@ object Dedup {
                         nBuckets: Int = 32): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // true overwrite semantics: a PREVIOUS session's index (catalog entry
-    // gone, managed location still on disk) must not block the rebuild —
-    // saveAsTable refuses to adopt an existing location it didn't create
-    indexTables(table).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(warehouseDir(spark), t)
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(loc)
-      }
-    }
-    java.nio.file.Files.deleteIfExists(compactMarker(spark, table))
+    minhashStore(spark, table).reset()
     bucketRows(docs, idCol, textCol, bands, rowsPerBand)
       .select(col("id"), col("band"), col("h"), lit(0L).as("epoch"))
       .write.mode("overwrite").bucketBy(nBuckets, "band", "h")
@@ -125,38 +113,18 @@ object Dedup {
       .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_params")
   }
 
-  /** The index's table triple plus the compaction stage names a crashed
-    * maintenance run can leave behind. */
-  private def indexTables(table: String): Seq[String] =
-    Seq("", "_counts", "_params").flatMap(s =>
-      Seq(s"$table$s", s"$table${s}_cstage"))
-
-  private def warehouseDir(spark: org.apache.spark.sql.SparkSession): String =
-    spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-
-  private def compactMarker(spark: org.apache.spark.sql.SparkSession,
-                            table: String): java.nio.file.Path =
-    java.nio.file.Paths.get(warehouseDir(spark), s"_compact_pending_$table")
-
-  /** Drop any cached relation for the index triple before reading it.
-    * The index is appended to from OTHER sessions — a streaming
-    * foreachBatch runs in a CLONED session, and a long-lived consumer
-    * session caches a catalog table's file listing on first touch — so
-    * both the probe (would silently miss appended epochs) and the
-    * append's replay guard (a stale counts listing would double-append
-    * an epoch that is already in) must re-list, not trust the cache. */
-  private def refreshIndexTables(spark: org.apache.spark.sql.SparkSession,
-                                 table: String): Unit =
-    Seq(table, s"${table}_counts", s"${table}_params").foreach { t =>
-      if (spark.catalog.tableExists(t)) spark.catalog.refreshTable(t)
-    }
-
-  /** Params tables written before epoch compaction existed lack the
-    * max_folded_epoch column — read it tolerantly. */
-  private def maxFoldedOf(p: org.apache.spark.sql.Row): Long =
-    if (p.schema.fieldNames.contains("max_folded_epoch"))
-      p.getAs[Long]("max_folded_epoch")
-    else -1L
+  /** The index's epoch store. An append writes the bucket rows, then the
+    * counts — the epoch ledger. Compaction rewrites both tables keeping
+    * the SAME bucket spec (the no-shuffle probe layout is preserved across
+    * the swap — plan-guarded in the spec): bucket rows relabel, count rows
+    * sum per key. */
+  private[graft] def minhashStore(spark: org.apache.spark.sql.SparkSession,
+                                  table: String): EpochStore =
+    EpochStore.tables(spark, table, Seq(
+      EpochStore.relabel("", Seq("band", "h")),
+      EpochStore.EpochData("_counts", Nil, (df, b) =>
+        df.groupBy("band", "h").agg(sum("n_corpus").as("n_corpus"))
+          .withColumn("epoch", lit(b)))))
 
   /** Whether an epoch's rows have already landed in the index — the
     * replay guard (a Spark write job commits atomically, so an epoch is
@@ -165,7 +133,7 @@ object Dedup {
     * baseline, so a replayed append must stay a no-op. */
   def epochInMinhashIndex(spark: org.apache.spark.sql.SparkSession,
                           table: String, epoch: Long): Boolean =
-    epoch <= maxFoldedOf(spark.table(s"${table}_params").head()) ||
+    epoch <= minhashStore(spark, table).maxFolded ||
       spark.table(s"${table}_counts").filter(col("epoch") === epoch)
         .limit(1).count() > 0
 
@@ -188,13 +156,14 @@ object Dedup {
   def appendToMinhashIndex(docs: DataFrame, idCol: String, textCol: String,
                            table: String, epoch: Long = -1L): Unit = {
     val spark = docs.sparkSession
-    refreshIndexTables(spark, table)
+    val store = minhashStore(spark, table)
+    store.open()
     val p = spark.table(s"${table}_params").head()
     val (bands, rowsPerBand, nBuckets) = (p.getInt(0), p.getInt(1), p.getInt(2))
     val e =
       if (epoch >= 0L) epoch
       else math.max(spark.table(s"${table}_counts")
-        .agg(max("epoch")).head().getLong(0), maxFoldedOf(p)) + 1L
+        .agg(max("epoch")).head().getLong(0), store.maxFolded) + 1L
     if (epoch >= 0L && epochInMinhashIndex(spark, table, e)) return
     // materialize the shard's bucket rows ONCE before either write: the
     // bucket write and the counts write are separate jobs, and a lazy plan
@@ -225,11 +194,11 @@ object Dedup {
     * (same recover-on-next-touch contract as `Snapshots.compact`). */
   def openMinhashIndex(spark: org.apache.spark.sql.SparkSession,
                        table: String): MinhashIndex = {
-    finishPendingIndexCompact(spark, table)
-    refreshIndexTables(spark, table)
+    val store = minhashStore(spark, table)
+    store.open()
     val p = spark.table(s"${table}_params").head()
     MinhashIndex(spark.table(table), spark.table(s"${table}_counts"),
-      p.getInt(0), p.getInt(1), maxFoldedOf(p))
+      p.getInt(0), p.getInt(1), store.maxFolded)
   }
 
   /** Index maintenance — fold the epochs ingestion accumulated into ONE
@@ -237,9 +206,8 @@ object Dedup {
     * table and one count row per touched key: at shard-per-hour ingestion
     * the table becomes thousands of small files per bucket and the probe's
     * counts semi-join reads k rows per key. Compaction rewrites both
-    * tables keeping the SAME bucket spec (the no-shuffle probe layout is
-    * preserved across the swap — plan-guarded in the spec) with all rows
-    * under baseline epoch = the max folded epoch id.
+    * tables with all rows under baseline epoch = the max folded epoch id
+    * (see `minhashStore`, and `graft.io.EpochStore` for the protocol).
     *
     * Probe results are byte-identical before and after (spec-pinned,
     * including combined-cap drops: counts are summed per key either way).
@@ -248,71 +216,10 @@ object Dedup {
     * in flight, because a replay of a folded epoch can no longer exclude
     * its own rows (`incrementalCandidates` fails loudly on that case).
     * Committed-batch replays stay no-ops: `epochInMinhashIndex` counts
-    * folded epochs as present via params.max_folded_epoch.
-    *
-    * Crash safety: stage tables are written first (invisible — probes
-    * read only the live names), then an atomically-published marker makes
-    * the three-table swap recoverable; a crash anywhere inside it is
-    * finished by the next compact/open on the index. */
+    * folded epochs as present via params.max_folded_epoch. */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
                           table: String): Long =
-    compactMinhashIndexImpl(spark, table, crashBeforeSwap = false)
-
-  /** `crashBeforeSwap` is a test seam: throw after the marker publishes
-    * but before the swap — the worst crash point recovery must finish. */
-  private[graft] def compactMinhashIndexImpl(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      crashBeforeSwap: Boolean): Long = {
-    import spark.implicits._
-    finishPendingIndexCompact(spark, table)
-    val p = spark.table(s"${table}_params").head()
-    val (bands, rowsPerBand, nBuckets) = (p.getInt(0), p.getInt(1), p.getInt(2))
-    val baseline = spark.table(s"${table}_counts")
-      .agg(max("epoch")).head().getLong(0)
-    if (baseline <= maxFoldedOf(p)) return maxFoldedOf(p) // already compact
-    spark.table(table)
-      .select(col("id"), col("band"), col("h"), lit(baseline).as("epoch"))
-      .write.mode("overwrite").bucketBy(nBuckets, "band", "h")
-      .sortBy("band", "h").format("parquet").saveAsTable(s"${table}_cstage")
-    spark.table(s"${table}_counts")
-      .groupBy("band", "h").agg(sum("n_corpus").as("n_corpus"))
-      .select(col("band"), col("h"), col("n_corpus"), lit(baseline).as("epoch"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_counts_cstage")
-    Seq((bands, rowsPerBand, nBuckets, baseline))
-      .toDF("bands", "rows_per_band", "n_buckets", "max_folded_epoch")
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_params_cstage")
-    val marker = compactMarker(spark, table)
-    val tmp = java.nio.file.Paths.get(marker.toString + ".tmp")
-    java.nio.file.Files.createDirectories(marker.getParent)
-    java.nio.file.Files.writeString(tmp, table)
-    java.nio.file.Files.move(tmp, marker,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    if (crashBeforeSwap)
-      throw new IllegalStateException("test crash seam: before index swap")
-    finishPendingIndexCompact(spark, table)
-    baseline
-  }
-
-  /** Complete a compaction swap: per table, drop the live name and rename
-    * the stage into it (managed-table rename moves the data directory),
-    * then clear the marker. Idempotent — a missing stage means that
-    * table's swap already happened. */
-  private def finishPendingIndexCompact(
-      spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    val marker = compactMarker(spark, table)
-    if (!java.nio.file.Files.exists(marker)) return
-    for (suffix <- Seq("", "_counts", "_params")) {
-      val (stage, dest) = (s"$table${suffix}_cstage", s"$table$suffix")
-      if (spark.catalog.tableExists(stage)) {
-        spark.sql(s"DROP TABLE IF EXISTS $dest")
-        spark.sql(s"ALTER TABLE $stage RENAME TO $dest")
-      }
-    }
-    java.nio.file.Files.deleteIfExists(marker)
-    ()
-  }
+    minhashStore(spark, table).compact()
 
   /** Incremental LSH candidates: dedup a NEW shard against an already-
     * indexed corpus WITHOUT re-processing the corpus — the shape corpus

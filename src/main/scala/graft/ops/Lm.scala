@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.EpochStore
 import graft.queries.{Dialect, TrainingQueries}
 
 /** The n-gram language model SERVED: train the per-language character-bigram
@@ -16,7 +17,7 @@ import graft.queries.{Dialect, TrainingQueries}
   * KB-sized at any corpus scale): counts are additive, so an ingested
   * shard extends the model with one SHARD-scale aggregate — the same
   * additive-epoch contract as the minhash/ANN/Mix serving layers, folded
-  * by the shared `CellsMaintenance` compaction with its crash-safe swap
+  * by the shared `graft.io.EpochStore` compaction with its crash-safe swap
   * and folded-epoch replay interlock. The quantized probabilities derive
   * from the folded counts at open time (a few thousand rows of driver-free
   * arithmetic, never a corpus read).
@@ -36,17 +37,22 @@ import graft.queries.{Dialect, TrainingQueries}
   */
 object Lm {
   private val Sp = Dialect.Spark
-  import Ann.CellsMaintenance
 
   /** floor(1e9 / 37): the quantized probability of a bigram whose prefix
     * character was never seen in training (c2 = c1n = 0). */
   val UnseenPrefixQ: Long = 27027027L
 
-  /** One epoch-partitioned dataset: count rows fold by RE-AGGREGATION
-    * (sums are additive across epochs), not relabeling. */
-  private val countsDirs = Seq(CellsMaintenance.EpochDir("counts", Seq("epoch"),
-    (df, b) => df.groupBy("lang", "bg").agg(sum("cnt").as("cnt"))
-      .withColumn("epoch", lit(b))))
+  /** The counts of the model version under `dir`: one epoch-partitioned
+    * dataset whose rows fold by RE-AGGREGATION (sums are additive across
+    * epochs), not relabeling. */
+  private def countsAt(spark: SparkSession, dir: String): EpochStore =
+    EpochStore.dirs(spark, dir, Seq(EpochStore.EpochData("counts", Seq("epoch"),
+      (df, b) => df.groupBy("lang", "bg").agg(sum("cnt").as("cnt"))
+        .withColumn("epoch", lit(b)))))
+
+  /** The CURRENT model version's counts store. */
+  private[graft] def countsStore(spark: SparkSession, path: String): EpochStore =
+    countsAt(spark, cur(path))
 
   /** See Mix.parserParity — the shared expression strings carry regex
     * literals that parse verbatim only under escapedStringLiterals. */
@@ -129,7 +135,7 @@ object Lm {
   }
 
   private def buildTo(docs: DataFrame, dir: String): Unit = {
-    CellsMaintenance.reset(dir, countsDirs)
+    countsAt(docs.sparkSession, dir).reset()
     bigramStats(docs).withColumn("epoch", lit(0L))
       .write.partitionBy("epoch").mode("overwrite").parquet(s"$dir/counts")
     val m = modelFromCounts(
@@ -148,7 +154,7 @@ object Lm {
     * compaction folded it into the baseline (within the CURRENT model
     * version — a retrain rebases epoch history). */
   def epochInCounts(spark: SparkSession, path: String, epoch: Long): Boolean =
-    epoch <= CellsMaintenance.maxFolded(cur(path)) ||
+    epoch <= countsStore(spark, path).maxFolded ||
       spark.read.parquet(s"${cur(path)}/counts")
         .filter(col("epoch").cast("long") === epoch).limit(1).count() > 0
 
@@ -156,11 +162,11 @@ object Lm {
     * partition — the model's probabilities shift to include the shard
     * with NO corpus read. Dynamic partition overwrite makes a replayed
     * ingest rewrite itself byte-identically; an epoch already folded away
-    * by compaction is refused loudly (`CellsMaintenance` interlock). */
+    * by compaction is refused loudly (`EpochStore` interlock). */
   def appendCounts(shard: DataFrame, path: String, epoch: Long): Unit = {
     require(epoch > 0L, s"epoch must be positive (0 is the base build): $epoch")
     val d = cur(path)
-    CellsMaintenance.requireAppendable(d, epoch, countsDirs)
+    countsAt(shard.sparkSession, d).requireUnfolded(epoch)
     bigramStats(shard).withColumn("epoch", lit(epoch))
       .write.partitionBy("epoch")
       .option("partitionOverwriteMode", "dynamic")
@@ -169,13 +175,12 @@ object Lm {
 
   /** Fold ingestion epochs into one baseline row per (lang, bigram). */
   def compactCounts(spark: SparkSession, path: String): Long =
-    CellsMaintenance.compact(spark, cur(path), crashBeforeSwap = false,
-      countsDirs)
+    countsStore(spark, path).compact()
 
   /** Reopen the model (finishing any crashed compaction swap first). */
   def openModel(spark: SparkSession, path: String): Model = {
     val d = cur(path)
-    CellsMaintenance.finishPending(d, countsDirs)
+    countsAt(spark, d).open()
     val cuts = if (new java.io.File(s"$d/cuts").exists())
       Some(spark.read.parquet(s"$d/cuts")) else None
     modelFromCounts(spark.read.parquet(s"$d/counts"), cuts)

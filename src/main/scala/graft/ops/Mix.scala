@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.EpochStore
 import graft.queries.{Dialect, TrainingQueries}
 
 /** Domain-mixture quota sampling served from a MAINTAINED stats table.
@@ -13,7 +14,7 @@ import graft.queries.{Dialect, TrainingQueries}
   * side table: built once from the corpus, extended per ingested shard
   * with one SHARD-scale aggregate (no corpus read — the same additive-
   * epoch contract as the minhash and ANN serving layers), folded by the
-  * shared `CellsMaintenance` compaction with its crash-safe swap and
+  * shared `graft.io.EpochStore` compaction with its crash-safe swap and
   * folded-epoch replay interlock. Rates derive from the stats (a
   * #domains-row frame); the per-doc assignment is the same broadcast +
   * narrow pass as d14.
@@ -26,14 +27,14 @@ import graft.queries.{Dialect, TrainingQueries}
   */
 object Mix {
   private val Sp = Dialect.Spark
-  import Ann.CellsMaintenance
 
   /** One epoch-partitioned dataset: stats rows fold by RE-AGGREGATION
     * (sums are additive across epochs), not relabeling. */
-  private val statsDirs = Seq(CellsMaintenance.EpochDir("stats", Seq("epoch"),
-    (df, b) => df.groupBy("source")
-      .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"))
-      .withColumn("epoch", lit(b))))
+  private[graft] def statsStore(spark: SparkSession, path: String): EpochStore =
+    EpochStore.dirs(spark, path, Seq(EpochStore.EpochData("stats", Seq("epoch"),
+      (df, b) => df.groupBy("source")
+        .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"))
+        .withColumn("epoch", lit(b)))))
 
   /** MixSql strings carry regex literals ('\S+'); they parse verbatim only
     * under escapedStringLiterals — the same conf `SparkEntry.runShared`
@@ -54,7 +55,7 @@ object Mix {
 
   /** Build the stats table once from the existing corpus (epoch 0). */
   def writeStats(docs: DataFrame, path: String): Unit = {
-    CellsMaintenance.reset(path, statsDirs)
+    statsStore(docs.sparkSession, path).reset()
     domainStats(docs).withColumn("epoch", lit(0L))
       .write.partitionBy("epoch").mode("overwrite").parquet(s"$path/stats")
   }
@@ -62,17 +63,17 @@ object Mix {
   /** Replay guard: an epoch is "in" once its partition committed or once
     * compaction folded it into the baseline. */
   def epochInStats(spark: SparkSession, path: String, epoch: Long): Boolean =
-    epoch <= CellsMaintenance.maxFolded(path) ||
+    epoch <= statsStore(spark, path).maxFolded ||
       spark.read.parquet(s"$path/stats")
         .filter(col("epoch").cast("long") === epoch).limit(1).count() > 0
 
   /** Shard-scale ingest: one aggregate over the shard lands as an epoch
     * partition. Dynamic partition overwrite makes a replayed ingest
     * rewrite itself byte-identically; an epoch already folded away by
-    * compaction is refused loudly (`CellsMaintenance` interlock). */
+    * compaction is refused loudly (`EpochStore` interlock). */
   def appendStats(shard: DataFrame, path: String, epoch: Long): Unit = {
     require(epoch > 0L, s"epoch must be positive (0 is the base build): $epoch")
-    CellsMaintenance.requireAppendable(path, epoch, statsDirs)
+    statsStore(shard.sparkSession, path).requireUnfolded(epoch)
     domainStats(shard).withColumn("epoch", lit(epoch))
       .write.partitionBy("epoch")
       .option("partitionOverwriteMode", "dynamic")
@@ -81,11 +82,11 @@ object Mix {
 
   /** Fold ingestion epochs into one baseline row per source. */
   def compactStats(spark: SparkSession, path: String): Long =
-    CellsMaintenance.compact(spark, path, crashBeforeSwap = false, statsDirs)
+    statsStore(spark, path).compact()
 
   /** Reopen the stats (finishing any crashed compaction swap first). */
   def openStats(spark: SparkSession, path: String): DataFrame = {
-    CellsMaintenance.finishPending(path, statsDirs)
+    statsStore(spark, path).open()
     spark.read.parquet(s"$path/stats")
   }
 
@@ -99,10 +100,7 @@ object Mix {
     * shifted rates. */
   def openStatsExcluding(spark: SparkSession, path: String,
                          epoch: Long): DataFrame = {
-    val mf = CellsMaintenance.maxFolded(path)
-    require(epoch > mf,
-      s"epoch $epoch was folded by stats compaction (max folded: $mf); " +
-        "compact only while ingestion is quiescent")
+    statsStore(spark, path).requireUnfolded(epoch)
     openStats(spark, path).filter(col("epoch").cast("long") =!= epoch)
   }
 

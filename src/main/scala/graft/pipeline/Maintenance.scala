@@ -11,7 +11,7 @@ import graft.ops.{Ann, Decontaminate, Dedup, Lm, Mix}
   * QUIESCENCE CONTRACT (stated once, holds for every table below): run
   * only while ingestion is quiescent — the streaming loop stopped with
   * its last batch fully committed, no batch writer live. Each table's
-  * `_max_folded` / `_compact_pending` interlock then guarantees (a) a
+  * `graft.io.EpochStore` interlock then guarantees (a) a
   * crash anywhere inside any swap is finished by the next open/append,
   * (b) probes before and after the window are byte-identical, and (c) a
   * replay of a FOLDED epoch refuses loudly instead of corrupting the
@@ -24,9 +24,8 @@ import graft.ops.{Ann, Decontaminate, Dedup, Lm, Mix}
 object Maintenance {
 
   /** One compacted table: which serving table, and the fold point (max
-    * epoch folded into the baseline; 0 or -1 per the table family's
-    * convention = bootstrap-only, nothing had accumulated — the cells
-    * layout reports -1 for never-folded, the warehouse indexes 0). */
+    * epoch folded into the baseline; -1 = never folded — a bootstrap-only
+    * table, nothing had accumulated and nothing was rewritten). */
   final case class Fold(table: String, name: String, foldPoint: Long)
 
   /** Compact all serving tables of `ixs` (+ the grown corpus text table

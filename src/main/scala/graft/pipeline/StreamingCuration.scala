@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import graft.ops.Ann.CellsMaintenance
+import graft.io.EpochStore
 
 /** The FULL incremental curation loop (`pipeline.Curation`) as a
   * checkpointed Structured Streaming job — the form a 100 TB ingest
@@ -42,7 +42,7 @@ import graft.ops.Ann.CellsMaintenance
   * needs candidate-id-selective text for jaccard verification, and the
   * contract is that it holds text for every doc the index knows. It lives
   * as an epoch-partitioned parquet dataset managed by the same
-  * `CellsMaintenance` as every other serving table — so shard-per-hour
+  * `EpochStore` as every other serving table — so shard-per-hour
   * ingestion's file accretion folds away with the same crash-safe
   * staged-swap compaction and folded-epoch replay interlock. */
 object StreamingCuration {
@@ -53,12 +53,13 @@ object StreamingCuration {
     StructField("doc_id", LongType), StructField("text", StringType),
     StructField("source", StringType), StructField("lang", StringType)))
 
-  private val docsDirs = Seq(CellsMaintenance.relabel("docs", Seq("epoch")))
+  private[graft] def corpusStore(spark: SparkSession, path: String): EpochStore =
+    EpochStore.dirs(spark, path, Seq(EpochStore.relabel("docs", Seq("epoch"))))
   private val docCols = Seq("doc_id", "text", "source", "lang")
 
   /** Write the corpus text table from the bootstrap corpus (epoch 0). */
   def writeCorpus(corpus: DataFrame, path: String): Unit = {
-    CellsMaintenance.reset(path, docsDirs)
+    corpusStore(corpus.sparkSession, path).reset()
     corpus.select(docCols.map(col): _*).withColumn("epoch", lit(0L))
       .write.partitionBy("epoch").mode("overwrite").parquet(s"$path/docs")
   }
@@ -68,7 +69,7 @@ object StreamingCuration {
     * folded by compaction is refused loudly. */
   def appendCorpus(keepers: DataFrame, path: String, epoch: Long): Unit = {
     require(epoch > 0L, s"epoch must be positive (0 is the bootstrap): $epoch")
-    CellsMaintenance.requireAppendable(path, epoch, docsDirs)
+    corpusStore(keepers.sparkSession, path).requireUnfolded(epoch)
     keepers.select(docCols.map(col): _*).withColumn("epoch", lit(epoch))
       .write.partitionBy("epoch")
       .option("partitionOverwriteMode", "dynamic")
@@ -81,22 +82,16 @@ object StreamingCuration {
     * verification fetch sees the exact pre-accept corpus. */
   def openCorpus(spark: SparkSession, path: String,
                  excludeEpoch: Option[Long] = None): DataFrame = {
-    CellsMaintenance.finishPending(path, docsDirs)
+    val store = corpusStore(spark, path)
+    store.open()
+    excludeEpoch.foreach(store.requireUnfolded)
     val docs = spark.read.parquet(s"$path/docs")
-    excludeEpoch match {
-      case Some(e) =>
-        val mf = CellsMaintenance.maxFolded(path)
-        require(e > mf,
-          s"epoch $e was folded by corpus compaction (max folded: $mf); " +
-            "compact only while ingestion is quiescent")
-        docs.filter(col("epoch").cast("long") =!= e)
-      case None => docs
-    }
+    excludeEpoch.fold(docs)(e => docs.filter(col("epoch").cast("long") =!= e))
   }
 
   /** Fold the accumulated accept epochs into one baseline partition. */
   def compactCorpus(spark: SparkSession, path: String): Long =
-    CellsMaintenance.compact(spark, path, crashBeforeSwap = false, docsDirs)
+    corpusStore(spark, path).compact()
 
   /** Bootstrap ALL serving state once from the existing corpus: the
     * Curation indexes (minhash, mix stats, probe model, LM — plus the

@@ -427,7 +427,7 @@ class DecontaminateSpec extends AnyFunSuite {
       Seq((13L, "more words for the next epoch here"))
         .toDF("doc_id", "text"), "text", table, epoch = 4L)
     assertThrows[IllegalStateException] {
-      Decontaminate.compactGramIndexImpl(spark, table, crashBeforeSwap = true)
+      Decontaminate.gramStore(spark, table).compact(crashBeforeSwap = true)
     }
     Decontaminate.openGramIndex(spark, table)
     val ep2 = spark.table(table).agg(org.apache.spark.sql.functions.min("epoch"), org.apache.spark.sql.functions.max("epoch")).head()

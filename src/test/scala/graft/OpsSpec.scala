@@ -466,7 +466,7 @@ class OpsSpec extends AnyFunSuite {
         Ann.Ivf.openIndex(spark, dir, "vec_id", "embedding"), qv, 10, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     intercept[IllegalStateException] {
-      Ann.CellsMaintenance.compact(spark, dir, crashBeforeSwap = true)
+      Ann.cellsStore(spark, dir).compact(crashBeforeSwap = true)
     }
     // crashed mid-compaction: marker + staged rewrite are on disk, live untouched
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_compact_pending")))
@@ -478,7 +478,7 @@ class OpsSpec extends AnyFunSuite {
     assert(got === want)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_compact_pending")))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "cells_stage")))
-    assert(Ann.CellsMaintenance.maxFolded(dir) === 1L)
+    assert(Ann.cellsStore(spark, dir).maxFolded === 1L)
     // the fold point survives the crash-recovery path too
     intercept[IllegalArgumentException] {
       Ann.Ivf.appendToIndex(spark, dir, embOf(301L to 400L), "embedding", epoch = 1L)
@@ -1056,7 +1056,7 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val pairs0 = probe()
     intercept[IllegalStateException] {
-      Dedup.compactMinhashIndexImpl(spark, "mh_idx_crash", crashBeforeSwap = true)
+      Dedup.minhashStore(spark, "mh_idx_crash").compact(crashBeforeSwap = true)
     }
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get("spark-warehouse", "_compact_pending_mh_idx_crash")))
