@@ -129,11 +129,12 @@ object Decontaminate {
     * document. High ratios flag licence headers, templated boilerplate,
     * and near-copies that survived doc-level dedup.
     *
-    * Scale shape: the (id, gram-hash) table's closing distinct() is an
-    * exchange both consumers (the ≥2-doc gram aggregate and the probe)
-    * reuse, so the expensive gram derivation runs once; everything
-    * downstream is gh-keyed hash aggs + an equi-join, then the id-keyed
-    * reattach. Output: (idCol, n_grams, n_dup, dup_ratio). */
+    * Scale shape: the (id, gram-hash) table has no exchange (`gramTable`
+    * is a per-row array_distinct + explode), so each of its two consumers
+    * (the ≥2-doc gram aggregate and the probe) derives it narrowly in its
+    * own map stage; everything downstream is gh-keyed hash aggs + an
+    * equi-join, then the id-keyed reattach.
+    * Output: (idCol, n_grams, n_dup, dup_ratio). */
   def selfDupScore(docs: DataFrame, idCol: String, textCol: String,
                    n: Int = 13): DataFrame = {
     require(n >= 2, s"n=$n: a 1-gram rule flags any shared word — " +
@@ -173,21 +174,22 @@ object Decontaminate {
     * uses); n_removed counts cut words. Deterministic: the keeper rule is
     * min(id), no RNG, no floats.
     *
-    * Scale shape: tokens and grams are one narrow explode each (words
-    * bound BEFORE the gram lambda — the O(grams) re-evaluation trap);
-    * shared-gram resolution is a gh-keyed hash agg; marked positions come
-    * back through a gh equi-join; coverage is ONE window per doc (running
-    * max of marked-interval ends — never an interval theta-join); the
-    * rebuild is a per-doc hash agg over an array_sort, not a global sort.
-    * Per-doc window state is bounded by words-per-doc, the same
-    * mega-doc-salting assumption as the rest of the span tier.
+    * Scale shape: grams are one narrow posexplode (words bound BEFORE the
+    * gram lambda — the O(grams) re-evaluation trap); shared-gram
+    * resolution is a gh-keyed hash agg; marked positions come back through
+    * a gh equi-join. The rebuild never explodes words: the marked starts
+    * collapse into one array per doc (an id-keyed agg over the marked
+    * rows only, a small fraction of positions), that array joins id-keyed
+    * onto the doc's word array, and coverage plus survivors come out of
+    * one narrow sweep per row (`keptPositions`). Docs with no marked start
+    * pass through untouched. Per-row state is bounded by words-per-doc,
+    * the same mega-doc-salting assumption as the rest of the span tier.
     * Output: (idCol, n_words, n_removed, text_clean). */
   def removeDupSpans(docs: DataFrame, idCol: String, textCol: String,
                      n: Int = 13): DataFrame = {
     require(n >= 2, s"n=$n: a 1-gram rule removes any shared word — " +
       "use a real n-gram width")
     val w = docs.select(col(idCol).as("id"), wordsOf(col(textCol)).as("w"))
-    val tok = w.select(col("id"), posexplode(col("w")).as(Seq("pos", "word")))
     val grams = w.select(col("id"),
       posexplode(gramsFromWords(col("w"), n)).as(Seq("pos", "gh")))
     // per-doc-distinct pairs come from a per-row array_distinct (ids are
@@ -202,38 +204,54 @@ object Decontaminate {
     val marked = grams.join(shared, "gh")
       .filter(col("id") =!= col("keeper"))
       .select(col("id"), col("pos"))
-    rebuildWithoutMarked(docs.select(col(idCol).as("id")), tok, marked, n)
-      .withColumnRenamed("id", idCol)
+    rebuildNormalized(w, marked, n).withColumnRenamed("id", idCol)
   }
 
-  /** Shared tail of the span-removal forms: running-max interval coverage
-    * over the marked gram starts (ONE window per doc), then the word-level
-    * rebuild (per-doc hash agg over array_sort, no global sort). `tok` is
-    * (id, pos, word); `marked` is (id, pos) gram starts to cut; `ids` the
-    * doc universe. Output: (id, n_words, n_removed, text_clean). */
-  private def rebuildWithoutMarked(ids: DataFrame, tok: DataFrame,
-                                   marked: DataFrame, n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val win = Window.partitionBy("id").orderBy("pos")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cov = tok.join(marked.withColumn("mk", lit(true)), Seq("id", "pos"), "left")
-      .withColumn("cov_end", max(when(col("mk"), col("pos") + n)).over(win))
-    val kept = cov.filter(col("cov_end").isNull || col("cov_end") <= col("pos"))
-    val nw = tok.groupBy("id").agg(count("*").cast("int").as("n_words"))
-    val agg = kept.groupBy("id").agg(
-      count("*").cast("int").as("n_kept"),
-      array_join(transform(
-        array_sort(collect_list(struct(col("pos"), col("word")))),
-        s => s.getField("word")), " ").as("text_clean"))
-    ids.distinct()
-      .join(nw, Seq("id"), "left")
-      .join(agg, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("n_words"), lit(0)).as("n_words"),
-        (coalesce(col("n_words"), lit(0)) - coalesce(col("n_kept"), lit(0)))
-          .as("n_removed"),
-        coalesce(col("text_clean"), lit("")).as("text_clean"))
+  /** The coverage kernel: the positions of a `nWords`-word doc that
+    * survive once every word covered by a marked gram start is cut (start
+    * `p` covers words `p until p + n`). One sort of the starts, one sweep
+    * of the words with a running `covEnd = max(p + n)` over the starts
+    * `<= i`; word `i` is kept iff `covEnd <= i`. Starts may repeat or
+    * arrive in any order. */
+  private[graft] def keptPositions(nWords: Int, starts: Seq[Int],
+                                   n: Int): Array[Int] = {
+    val s = starts.toArray
+    java.util.Arrays.sort(s)
+    val kept = Array.newBuilder[Int]
+    var covEnd = 0; var j = 0; var i = 0
+    while (i < nWords) {
+      while (j < s.length && s(j) <= i) { covEnd = math.max(covEnd, s(j) + n); j += 1 }
+      if (covEnd <= i) kept += i
+      i += 1
+    }
+    kept.result()
   }
+
+  /** Shared tail of the span-removal forms. `docs` carries (id, w, ...);
+    * `marked` is (id, pos) gram starts to cut. The starts become one
+    * array per doc (id-keyed agg), join id-keyed onto `docs`, and
+    * `keptPositions` runs once per row. Adds `_kp` (kept positions; null
+    * when the doc has no marked start, so such docs pass through
+    * untouched), `n_words` and `n_removed`. */
+  private def withKept(docs: DataFrame, marked: DataFrame, n: Int): DataFrame = {
+    val keep = udf((nWords: Int, starts: Seq[Int]) => keptPositions(nWords, starts, n))
+    docs.join(marked.groupBy("id").agg(collect_list("pos").as("_ms")),
+        Seq("id"), "left")
+      // a null text has a null word array, and Spark 4's size(null) is null
+      .withColumn("n_words", coalesce(size(col("w")), lit(0)))
+      .withColumn("_kp", when(col("_ms").isNotNull, keep(col("n_words"), col("_ms"))))
+      .withColumn("n_removed",
+        col("n_words") - coalesce(size(col("_kp")), col("n_words")))
+  }
+
+  /** The normalized rebuild: kept words joined by one space.
+    * Output: (id, n_words, n_removed, text_clean). */
+  private def rebuildNormalized(w: DataFrame, marked: DataFrame, n: Int): DataFrame =
+    withKept(w, marked, n)
+      .select(col("id"), col("n_words"), col("n_removed"),
+        coalesce(array_join(coalesce(
+          transform(col("_kp"), p => element_at(col("w"), p + 1)), col("w")), " "),
+          lit("")).as("text_clean"))
 
   /** The duplicated-gram index SERVED: the corpus side of `removeDupSpans`
     * as a build-once bucketed warehouse table of DISTINCT gram hashes, so
@@ -354,10 +372,7 @@ object Decontaminate {
   def removeDupSpansServed(shard: DataFrame, idCol: String, textCol: String,
                            index: GramIndex): DataFrame = {
     val w = shard.select(col(idCol).as("id"), wordsOf(col(textCol)).as("w"))
-    val tok = w.select(col("id"), posexplode(col("w")).as(Seq("pos", "word")))
-    val marked = servedMarked(w, index)
-    rebuildWithoutMarked(shard.select(col(idCol).as("id")), tok, marked,
-        index.n)
+    rebuildNormalized(w, servedMarked(w, index), index.n)
       .withColumnRenamed("id", idCol)
   }
 
@@ -423,38 +438,19 @@ object Decontaminate {
   def removeDupSpansServedPreserving(shard: DataFrame, idCol: String,
                                      textCol: String,
                                      index: GramIndex): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val n = index.n
-    val w = shard.select(col(idCol).as("id"), wordsOf(col(textCol)).as("w"))
-    val tok = w.select(col("id"), posexplode(col("w")).as(Seq("pos", "word")))
-    val marked = servedMarked(w, index)
-    val win = Window.partitionBy("id").orderBy("pos")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cov = tok
-      .join(marked.withColumn("mk", lit(true)), Seq("id", "pos"), "left")
-      .withColumn("cov_end", max(when(col("mk"), col("pos") + n)).over(win))
-    val kept = cov.filter(col("cov_end").isNull || col("cov_end") <= col("pos"))
-    val nw = tok.groupBy("id").agg(count("*").cast("int").as("n_words"))
-    val keptAgg = kept.groupBy("id")
-      .agg(sort_array(collect_list("pos")).as("kp"))
-    shard.select(col(idCol).as("id"), col(textCol).as("_text")).distinct()
-      .join(nw, Seq("id"), "left")
-      .join(keptAgg, Seq("id"), "left")
+    val d = shard.select(col(idCol).as("id"), col(textCol).as("_text"),
+      wordsOf(col(textCol)).as("w"))
+    withKept(d, servedMarked(d.select("id", "w"), index), index.n)
       // bind per-row scalars OUTSIDE the transform lambda (a free
-      // expression is re-evaluated per element)
-      .withColumn("_starts", runStartsUdf(col("_text")))
+      // expression is re-evaluated per element); only rebuilt docs scan
+      // their text for word starts
+      .withColumn("_starts", when(col("_kp").isNotNull, runStartsUdf(col("_text"))))
       .withColumn("_nst", size(col("_starts")))
       .withColumn("_tlen", length(col("_text")))
-      .select(col("id"),
-        coalesce(col("n_words"), lit(0)).as("n_words"),
-        (coalesce(col("n_words"), lit(0)) -
-          coalesce(size(col("kp")), lit(0))).as("n_removed"),
-        when(coalesce(col("n_words"), lit(0)) ===
-            coalesce(size(col("kp")), lit(0)),
-          coalesce(col("_text"), lit("")))             // untouched: verbatim
+      .select(col("id"), col("n_words"), col("n_removed"),
+        when(col("_kp").isNull, coalesce(col("_text"), lit("")))  // untouched: verbatim
           .otherwise(regexp_replace(regexp_replace(
-            array_join(transform(
-              coalesce(col("kp"), expr("CAST(array() AS ARRAY<INT>)")),
+            array_join(transform(col("_kp"),
               p => col("_text").substr(
                 element_at(col("_starts"), p + 1) + 1,
                 when(p + 2 <= col("_nst"), element_at(col("_starts"), p + 2))

@@ -175,17 +175,20 @@ class DecontaminateSpec extends AnyFunSuite {
       owners.getOrElseUpdate(g.mkString(" "), scala.collection.mutable.Set.empty) += id
     val keeper = owners.collect { case (g, ids) if ids.size >= 2 => g -> ids.min }
     words.map { case (id, w) =>
-      val covered = Array.fill(w.size)(false)
-      for (i <- 0 to w.size - n; if w.size >= n) {
-        val g = w.slice(i, i + n).mkString(" ")
-        keeper.get(g) match {
-          case Some(k) if k != id => (i until i + n).foreach(covered(_) = true)
-          case _ =>
-        }
+      val starts = (0 to w.size - n).filter { i =>
+        keeper.get(w.slice(i, i + n).mkString(" ")).exists(_ != id)
       }
+      val covered = coveredMask(w.size, starts, n)
       val kept = w.zipWithIndex.collect { case (word, i) if !covered(i) => word }
       id -> ((w.size, w.size - kept.size, kept.mkString(" ")))
     }.toMap
+  }
+
+  /** Brute-force coverage: start `p` covers words `p until p + n`. */
+  private def coveredMask(nWords: Int, starts: Seq[Int], n: Int): Array[Boolean] = {
+    val covered = Array.fill(nWords)(false)
+    for (p <- starts; i <- p until p + n) covered(i) = true
+    covered
   }
 
   test("removeDupSpans: keeper keeps the run, the copy loses exactly it, a clone empties") {
@@ -230,6 +233,101 @@ class DecontaminateSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1), r.getInt(2), r.getString(3)))).toMap
     assert(got17 === got)
+  }
+
+  /** (id, n_words, n_removed, text_clean) rows of a span-removal output. */
+  private def rows(df: org.apache.spark.sql.DataFrame): Map[Long, (Int, Int, String)] =
+    df.collect()
+      .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2), r.getString(3)))).toMap
+
+  /** Hand cases for the coverage kernel: (n words, marked starts, n). */
+  private val kernelCases = Seq(
+    (10, Seq(2, 3), 3),          // overlapping starts p, p+1
+    (12, Seq(0, 1, 2, 6), 5),    // starts nested inside an earlier cover
+    (12, Seq(7, 1, 4), 3),       // out of order
+    (9, Seq(6), 3),              // a start at nWords - n
+    (9, Seq(3, 3, 0, 3), 3),     // duplicates
+    (9, Seq(0, 3), 3),           // adjacent covers, nothing kept between
+    (9, Seq(0, 6), 3),           // separated covers
+    (9, Seq.empty[Int], 3),      // nothing marked
+    (3, Seq(0), 3))              // a full cover empties the doc
+
+  test("coverage kernel == brute-force mask on hand cases") {
+    kernelCases.foreach { case (nWords, starts, n) =>
+      val covered = coveredMask(nWords, starts, n)
+      val expected = (0 until nWords).filterNot(covered(_))
+      assert(Decontaminate.keptPositions(nWords, starts, n).toSeq == expected,
+        s"nWords=$nWords starts=$starts n=$n")
+    }
+  }
+
+  test("coverage kernel cases served: both rebuilds keep the brute-force survivors, preserving projects to normalized") {
+    import spark.implicits._
+    val n = 3
+    // one corpus doc per marked start, holding exactly that gram, so the
+    // served marks of shard doc c are exactly case c's (distinct) starts,
+    // each covering n = 3 words
+    val shardRows = kernelCases.zipWithIndex.map { case ((nWords, _, _), c) =>
+      val words = (0 until nWords).map(i => s"c${c}w$i")
+      val text = words.zipWithIndex.map { case (w, i) =>
+        if (i % 3 == 0) w.toUpperCase + "," else w }.mkString(" ") + "!"
+      (100L + c, text)
+    }
+    val corpusRows = kernelCases.zipWithIndex.flatMap { case ((_, starts, _), c) =>
+      starts.distinct.map(p => (p until p + n).map(i => s"c${c}w$i").mkString(" "))
+    }.zipWithIndex.map { case (t, i) => (1L + i, t) }
+    val table = s"gi_kernel_${System.nanoTime()}"
+    Decontaminate.writeGramIndex(corpusRows.toDF("doc_id", "text"), "text", table, n = n)
+    val idx = Decontaminate.openGramIndex(spark, table)
+    val shard = shardRows.toDF("doc_id", "text")
+    val normd = rows(Decontaminate.removeDupSpansServed(shard, "doc_id", "text", idx))
+    val presv = rows(
+      Decontaminate.removeDupSpansServedPreserving(shard, "doc_id", "text", idx))
+    kernelCases.zipWithIndex.foreach { case ((nWords, starts, _), c) =>
+      val covered = coveredMask(nWords, starts, n)
+      val kept = (0 until nWords).filterNot(covered(_)).map(i => s"c${c}w$i")
+      val expected = ((nWords, nWords - kept.size, kept.mkString(" ")))
+      assert(normd(100L + c) == expected, s"case $c")
+      val (nwP, nrP, txtP) = presv(100L + c)
+      assert((nwP, nrP, norm(txtP).mkString(" ")) == expected, s"case $c: $txtP")
+      if (starts.isEmpty) assert(txtP == shardRows(c)._2, "untouched doc not verbatim")
+    }
+    Seq(table, s"${table}_params", s"${table}_epochs")
+      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
+  }
+
+  test("span removal: null, empty and alnum-free texts, a doc shorter than n, and an untouched doc in all three forms") {
+    import spark.implicits._
+    val corpus = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
+    val table = s"gi_edge_${System.nanoTime()}"
+    Decontaminate.writeGramIndex(corpus, "text", table, n = 3)
+    val idx = Decontaminate.openGramIndex(spark, table)
+    val shard = Seq[(Long, String)](
+      (10L, null),
+      (11L, ""),
+      (12L, "?! -- ..."),                       // no alnum run
+      (13L, "Too Short"),                       // fewer than n words
+      (14L, "Nothing here is Shared, at all."), // nothing removed
+      (15L, "x Alpha beta Gamma y")             // the indexed run is cut
+    ).toDF("doc_id", "text")
+    val normalized = Map(
+      10L -> ((0, 0, "")), 11L -> ((0, 0, "")), 12L -> ((0, 0, "")),
+      13L -> ((2, 0, "too short")),
+      14L -> ((6, 0, "nothing here is shared at all")),
+      15L -> ((5, 3, "x y")))
+    assert(rows(Decontaminate.removeDupSpansServed(shard, "doc_id", "text", idx))
+      === normalized)
+    assert(rows(Decontaminate.removeDupSpans(corpus.union(shard), "doc_id", "text", n = 3))
+      === normalized + (1L -> ((4, 0, "alpha beta gamma delta"))))
+    // untouched docs pass through verbatim; a null text comes back empty
+    assert(rows(Decontaminate.removeDupSpansServedPreserving(shard, "doc_id", "text", idx))
+      === Map(
+        10L -> ((0, 0, "")), 11L -> ((0, 0, "")), 12L -> ((0, 0, "?! -- ...")),
+        13L -> ((2, 0, "Too Short")),
+        14L -> ((6, 0, "Nothing here is Shared, at all.")),
+        15L -> ((5, 3, "x y"))))
+    Seq(table, s"${table}_params", s"${table}_epochs")
+      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
   }
 
   test("served gram index: shard scrub == full corpus∪shard run restricted to the shard") {
@@ -480,11 +578,31 @@ class DecontaminateSpec extends AnyFunSuite {
 
   test("removeDupSpans plan: equi-joins only, no cartesian") {
     import spark.implicits._
+    // all three span-removal forms; the rebuild must stay a per-row pass
+    // over the word array: no per-word token rows, no per-doc window
     val docs = Seq((1L, "a b c d e"), (2L, "a b c d f")).toDF("doc_id", "text")
-    val p = Decontaminate.removeDupSpans(docs, "doc_id", "text", n = 3)
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct"), p.take(2000))
-    assert(!p.contains("BroadcastNestedLoopJoin"), p.take(2000))
+    val table = s"gi_plan_${System.nanoTime()}"
+    Decontaminate.writeGramIndex(docs.filter($"doc_id" === 1L), "text", table, n = 3)
+    val idx = Decontaminate.openGramIndex(spark, table)
+    val shard = docs.filter($"doc_id" === 2L)
+    Seq(
+      "removeDupSpans" -> Decontaminate.removeDupSpans(docs, "doc_id", "text", n = 3),
+      "removeDupSpansServed" ->
+        Decontaminate.removeDupSpansServed(shard, "doc_id", "text", idx),
+      "removeDupSpansServedPreserving" ->
+        Decontaminate.removeDupSpansServedPreserving(shard, "doc_id", "text", idx)
+    ).foreach { case (form, df) =>
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("CartesianProduct"), s"$form\n" + p.take(2000))
+      assert(!p.contains("BroadcastNestedLoopJoin"), s"$form\n" + p.take(2000))
+      val nodes = p.linesIterator.map(_.dropWhile(c => " :+-".contains(c)))
+      assert(!nodes.exists(_.startsWith("Window ")), s"$form\n" + p.take(4000))
+      assert("""posexplode\(w#\d+\)""".r.findFirstIn(p).isEmpty,
+        s"$form explodes the word array\n" + p.take(4000))
+    }
+    Seq(table, s"${table}_params", s"${table}_epochs")
+      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
   }
 
   test("plan: gram-hash equi-join, no cartesian") {
