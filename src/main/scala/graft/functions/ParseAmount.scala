@@ -97,6 +97,16 @@ object GraftFunctions {
     org.apache.spark.sql.GraftBridge.column(
       ParseAmount(org.apache.spark.sql.GraftBridge.expression(c)))
 
+  /** Column-API form of `AlnumRuns.words`. */
+  def alnum_words(c: Column): Column =
+    org.apache.spark.sql.GraftBridge.column(
+      AlnumWords(org.apache.spark.sql.GraftBridge.expression(c)))
+
+  /** Column-API form of `AlnumRuns.starts`. */
+  def alnum_word_starts(c: Column): Column =
+    org.apache.spark.sql.GraftBridge.column(
+      AlnumWordStarts(org.apache.spark.sql.GraftBridge.expression(c)))
+
   /** Register `parse_amount` for SQL use in this session. */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions.{alnum_word_starts, alnum_words}
 import graft.io.EpochStore
 
 /** Benchmark decontamination: flag corpus documents that share any word
@@ -21,15 +22,20 @@ import graft.io.EpochStore
   */
 object Decontaminate {
 
-  /** Normalized word array: lowercase, alnum runs only. */
-  private def wordsOf(textCol: Column): Column =
-    filter(split(lower(regexp_replace(textCol, "[^a-zA-Z0-9]+", " ")), " "),
-      w => length(w) > 0)
+  /** Normalized word array: the maximal ASCII `[a-zA-Z0-9]` runs,
+    * ASCII-lowercased, in one byte scan (`graft.functions.AlnumRuns`);
+    * null stays null, a text without such a run gives `[]`. The same words
+    * as the regex form `filter(split(lower(regexp_replace(t,
+    * "[^a-zA-Z0-9]+", " ")), " "), nonEmpty)` and its DuckDB oracle twin
+    * (after that replace only ASCII alnum and spaces remain), so gram
+    * hashes, and the gram indexes written with them, do not depend on
+    * which form computed them. */
+  private[graft] def wordsOf(textCol: Column): Column = alnum_words(textCol)
 
   /** n-gram hashes over an already-materialized word-array COLUMN. The
     * words must be a bound column, not an inline expression: Catalyst
     * inlines a free expression into the transform lambda and re-evaluates
-    * it per gram — the regexp+split would run O(grams) times per row
+    * it per gram — the word scan would run O(grams) times per row
     * (measured 23.6 s -> 1.6 s at sf0.1 for the bound form). */
   private def gramsFromWords(w: Column, n: Int): Column =
     when(size(w) >= n,
@@ -42,24 +48,23 @@ object Decontaminate {
   def gramHashes(textCol: Column, n: Int): Column =
     gramsFromWords(wordsOf(textCol), n)
 
-  /** Raw (id, gram-hash) rows, pre-distinct — the seam where a
-    * pre-exchange filter (bloom) can prune before any shuffle. */
-  private def gramRows(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int): DataFrame =
-    docs.select(col(idCol).as("id"), wordsOf(col(textCol)).as("w"))
-      .select(col("id"), explode(gramsFromWords(col("w"), n)).as("gh"))
+  /** Distinct (id, gram-hash) pairs of an (id, w) word frame. Ids are
+    * unique per document (every caller's contract), so duplicate (id, gh)
+    * pairs can only arise WITHIN one row — a per-row `array_distinct`
+    * before the explode yields exactly the distinct pairs with NO
+    * exchange, where the r6 form shuffled every gram row through a global
+    * `distinct()` (guide §2.4: a distinct on data that is already unique
+    * across rows). */
+  private def gramPairs(w: DataFrame, n: Int): DataFrame =
+    w.select(col("id"), explode(array_distinct(gramsFromWords(col("w"), n))).as("gh"))
 
-  /** Distinct (id, gram-hash) pairs for a document set. Ids are unique per
-    * document (every caller's contract), so duplicate (id, gh) pairs can
-    * only arise WITHIN one row — a per-row `array_distinct` before the
-    * explode yields exactly the distinct pairs with NO exchange, where the
-    * r6 form shuffled every gram row through a global `distinct()` (guide
-    * §2.4: a distinct on data that is already unique across rows). */
+  /** `gramPairs` of a document set, tokenized in the same narrow stage.
+    * Scale shape: one word scan and one per-row gram pass, no exchange;
+    * every consumer (the bench-overlap joins, the self-dup aggregate, the
+    * span-removal marks) shuffles only the (id, gh) longs it derives. */
   private def gramTable(docs: DataFrame, idCol: String, textCol: String,
                         n: Int): DataFrame =
-    docs.select(col(idCol).as("id"), wordsOf(col(textCol)).as("w"))
-      .select(col("id"),
-        explode(array_distinct(gramsFromWords(col("w"), n))).as("gh"))
+    gramPairs(docs.select(col(idCol).as("id"), wordsOf(col(textCol)).as("w")), n)
 
   /** Distinct bench-side gram hashes. The per-row array_distinct removes
     * within-doc repeats before the explode, so the global distinct's
@@ -174,37 +179,49 @@ object Decontaminate {
     * uses); n_removed counts cut words. Deterministic: the keeper rule is
     * min(id), no RNG, no floats.
     *
-    * Scale shape: grams are one narrow posexplode (words bound BEFORE the
-    * gram lambda — the O(grams) re-evaluation trap); shared-gram
-    * resolution is a gh-keyed hash agg; marked positions come back through
-    * a gh equi-join. The rebuild never explodes words: the marked starts
-    * collapse into one array per doc (an id-keyed agg over the marked
-    * rows only, a small fraction of positions), that array joins id-keyed
-    * onto the doc's word array, and coverage plus survivors come out of
-    * one narrow sweep per row (`keptPositions`). Docs with no marked start
-    * pass through untouched. Per-row state is bounded by words-per-doc,
-    * the same mega-doc-salting assumption as the rest of the span tier.
+    * Scale shape: the gram side never carries positions. The per-doc
+    * distinct (id, gh) pairs (`gramPairs`, narrow) shuffle once by gh and
+    * are sorted within each partition by (gh, id); one streaming pass
+    * (`runMarks`) then marks every pair after the first of its gh run, so
+    * there is no shared-gram aggregate and no keeper join. A boilerplate
+    * gram is a long run that the sort spills, never an in-memory list.
+    * The rebuild never explodes words: each doc's marked hashes collapse
+    * into one array (an id-keyed agg over the marked pairs only), that
+    * array joins id-keyed onto the doc's word array, and for marked docs
+    * only the gram hashes are recomputed to find the cut starts; coverage
+    * plus survivors come out of one narrow sweep per row
+    * (`keptPositions`). Docs with no mark pass through untouched. Per-row
+    * state is bounded by words-per-doc, the same mega-doc-salting
+    * assumption as the rest of the span tier.
     * Output: (idCol, n_words, n_removed, text_clean). */
   def removeDupSpans(docs: DataFrame, idCol: String, textCol: String,
                      n: Int = 13): DataFrame = {
     require(n >= 2, s"n=$n: a 1-gram rule removes any shared word — " +
       "use a real n-gram width")
     val w = docs.select(col(idCol).as("id"), wordsOf(col(textCol)).as("w"))
-    val grams = w.select(col("id"),
-      posexplode(gramsFromWords(col("w"), n)).as(Seq("pos", "gh")))
-    // per-doc-distinct pairs come from a per-row array_distinct (ids are
-    // unique per doc), not a global distinct() — the r6 form shuffled
-    // every positional gram row just to dedup within-doc repeats (r7,
-    // guide §2.4); the groupBy(gh) below is the only exchange left here
-    val shared = w.select(col("id"),
-        explode(array_distinct(gramsFromWords(col("w"), n))).as("gh"))
-      .groupBy("gh").agg(min("id").as("keeper"), count("*").as("nd"))
-      .filter(col("nd") >= 2).select("gh", "keeper")
-    // each (id, pos) carries exactly one gram, so this join cannot fan out
-    val marked = grams.join(shared, "gh")
-      .filter(col("id") =!= col("keeper"))
-      .select(col("id"), col("pos"))
-    rebuildNormalized(w, marked, n).withColumnRenamed("id", idCol)
+    rebuildNormalized(w, runMarks(gramPairs(w, n)), n).withColumnRenamed("id", idCol)
+  }
+
+  /** The min-id keeper rule over per-doc-distinct (id, gh) pairs: the
+    * (id, gh) pairs whose gram is in >= 2 docs and whose doc is not the
+    * gram's smallest id. Pairs are hash-partitioned by gh and sorted by
+    * (gh, id) within each partition, so each gram is one run that starts
+    * at its keeper; a streaming pass emits every later pair of the run. A
+    * run of one pair is an unshared gram. A null id can neither keep nor
+    * lose a gram, so null-id pairs are dropped before the sort (nulls
+    * sort first and would head their runs). Output: (id, gh). */
+  private[graft] def runMarks(pairs: DataFrame): DataFrame = {
+    // gh first: the exchange's compressed rows come out ~10% smaller
+    // than in (id, gh) order (measured on the benchmark corpus)
+    val sorted = pairs.select("gh", "id").filter(col("id").isNotNull)
+      .repartition(col("gh")).sortWithinPartitions("gh", "id")
+    sorted.mapPartitions { rows =>
+      var gh = 0L; var keeper: Any = null
+      rows.filter { r =>
+        if (keeper != null && r.getLong(0) == gh) r.get(1) != keeper
+        else { gh = r.getLong(0); keeper = r.get(1); false }
+      }
+    }(Encoders.row(sorted.schema)).select("id", "gh")
   }
 
   /** The coverage kernel: the positions of a `nWords`-word doc that
@@ -228,26 +245,31 @@ object Decontaminate {
   }
 
   /** Shared tail of the span-removal forms. `docs` carries (id, w, ...);
-    * `marked` is (id, pos) gram starts to cut. The starts become one
-    * array per doc (id-keyed agg), join id-keyed onto `docs`, and
-    * `keptPositions` runs once per row. Adds `_kp` (kept positions; null
-    * when the doc has no marked start, so such docs pass through
+    * `marks` is the (id, gh) pairs to cut. The marked hashes become one
+    * array per doc (id-keyed agg) and join id-keyed onto `docs`; for a
+    * marked doc only, the cut starts are the positions whose gram hash is
+    * marked, and `keptPositions` runs once per row. Adds `_kp` (kept
+    * positions; null when the doc has no mark, so such docs pass through
     * untouched), `n_words` and `n_removed`. */
-  private def withKept(docs: DataFrame, marked: DataFrame, n: Int): DataFrame = {
-    val keep = udf((nWords: Int, starts: Seq[Int]) => keptPositions(nWords, starts, n))
-    docs.join(marked.groupBy("id").agg(collect_list("pos").as("_ms")),
+  private def withKept(docs: DataFrame, marks: DataFrame, n: Int): DataFrame = {
+    val keep = udf { (nWords: Int, grams: Seq[Long], marked: Seq[Long]) =>
+      val m = marked.toSet
+      keptPositions(nWords, grams.indices.filter(i => m(grams(i))), n)
+    }
+    docs.join(marks.groupBy("id").agg(collect_list("gh").as("_mg")),
         Seq("id"), "left")
       // a null text has a null word array, and Spark 4's size(null) is null
       .withColumn("n_words", coalesce(size(col("w")), lit(0)))
-      .withColumn("_kp", when(col("_ms").isNotNull, keep(col("n_words"), col("_ms"))))
+      .withColumn("_kp", when(col("_mg").isNotNull,
+        keep(col("n_words"), gramsFromWords(col("w"), n), col("_mg"))))
       .withColumn("n_removed",
         col("n_words") - coalesce(size(col("_kp")), col("n_words")))
   }
 
   /** The normalized rebuild: kept words joined by one space.
     * Output: (id, n_words, n_removed, text_clean). */
-  private def rebuildNormalized(w: DataFrame, marked: DataFrame, n: Int): DataFrame =
-    withKept(w, marked, n)
+  private def rebuildNormalized(w: DataFrame, marks: DataFrame, n: Int): DataFrame =
+    withKept(w, marks, n)
       .select(col("id"), col("n_words"), col("n_removed"),
         coalesce(array_join(coalesce(
           transform(col("_kp"), p => element_at(col("w"), p + 1)), col("w")), " "),
@@ -368,7 +390,7 @@ object Decontaminate {
     * shard rows (x41 pins exactly that against the DuckDB full-run twin).
     * Plan: two probes of the index (left-semi for hits, left-anti for the
     * in-shard tier) — both stream the bucketed table with no exchange on
-    * the index side; only shard-scale rows shuffle. */
+    * the index side; only shard-scale (id, gh) pairs shuffle. */
   def removeDupSpansServed(shard: DataFrame, idCol: String, textCol: String,
                            index: GramIndex): DataFrame = {
     val w = shard.select(col(idCol).as("id"), wordsOf(col(textCol)).as("w"))
@@ -376,44 +398,20 @@ object Decontaminate {
       .withColumnRenamed("id", idCol)
   }
 
-  /** The served marked-position computation shared by the normalized and
-    * the text-preserving rebuilds. `w` is (id, w: array<string>) of
-    * normalized words; returns (id, pos) gram starts to cut. */
-  private def servedMarked(w: DataFrame, index: GramIndex): DataFrame = {
-    val grams = w.select(col("id"),
-      posexplode(gramsFromWords(col("w"), index.n)).as(Seq("pos", "gh")))
+  /** The served marks shared by the normalized and the text-preserving
+    * rebuilds. `w` is (id, w: array<string>) of normalized words; returns
+    * the (id, gh) pairs to cut. Scale shape: one narrow pass to the
+    * per-doc-distinct pairs, probed against the index twice; the pairs
+    * whose gram the index holds are marks outright (corpus seniority),
+    * and the misses go through the same sorted-runs rule as the full form
+    * (`runMarks`) for the in-shard keeper tier. */
+  private[graft] def servedMarked(w: DataFrame, index: GramIndex): DataFrame = {
+    val pairs = gramPairs(w, index.n)
     // the index may hold duplicate gh rows across epochs — semi/anti are
-    // the fan-out-proof probes (a left join would multiply positions)
-    val hit = grams.join(index.grams, Seq("gh"), "left_semi")
-      .select("id", "pos")
-    val miss = grams.join(index.grams, Seq("gh"), "left_anti")
-    val sharedShard = miss.select("id", "gh").distinct()
-      .groupBy("gh").agg(min("id").as("keeper"), count("*").as("nd"))
-      .filter(col("nd") >= 2).select("gh", "keeper")
-    val shardMarked = miss.join(sharedShard, "gh")
-      .filter(col("id") =!= col("keeper"))
-      .select("id", "pos")
+    // the fan-out-proof probes (a left join would multiply pairs)
+    val hit = pairs.join(index.grams, Seq("gh"), "left_semi").select("id", "gh")
     // disjoint by construction (semi vs anti on the same probe)
-    hit.union(shardMarked)
-  }
-
-  /** Codepoint start offsets (0-based) of the alnum word runs in a text —
-    * the bridge from normalized word POSITIONS back to ORIGINAL character
-    * spans. A loopy regex scan with no Catalyst equivalent (one matcher
-    * pass per row, narrow); offsets are codepoints, not UTF-16 units, so
-    * they line up with Spark's substring semantics on any text. */
-  private val runStartsUdf = udf { s: String =>
-    if (s == null) Array.empty[Int]
-    else {
-      val m = java.util.regex.Pattern.compile("[a-zA-Z0-9]+").matcher(s)
-      val b = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var lastChar = 0; var lastCp = 0
-      while (m.find()) {
-        lastCp += s.codePointCount(lastChar, m.start()); lastChar = m.start()
-        b += lastCp
-      }
-      b.toArray
-    }
+    hit.union(runMarks(pairs.join(index.grams, Seq("gh"), "left_anti")))
   }
 
   /** `removeDupSpansServed` with the ORIGINAL text preserved — the form
@@ -444,7 +442,7 @@ object Decontaminate {
       // bind per-row scalars OUTSIDE the transform lambda (a free
       // expression is re-evaluated per element); only rebuilt docs scan
       // their text for word starts
-      .withColumn("_starts", when(col("_kp").isNotNull, runStartsUdf(col("_text"))))
+      .withColumn("_starts", when(col("_kp").isNotNull, alnum_word_starts(col("_text"))))
       .withColumn("_nst", size(col("_starts")))
       .withColumn("_tlen", length(col("_text")))
       .select(col("id"), col("n_words"), col("n_removed"),

@@ -191,6 +191,85 @@ class DecontaminateSpec extends AnyFunSuite {
     covered
   }
 
+  test("tokenizer: one-pass wordsOf == the regex form on adversarial text") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val texts = Seq[String](
+      "İstanbul and aİb",                           // dotted capital I
+      "\u212A-value 5\u212A",                        // Kelvin sign
+      "\uFF21\uFF11 fullwidth \uFF41b2",              // fullwidth Ａ１ ａ
+      "alpha\uD83D\uDE00beta gamma",                 // surrogate-pair emoji
+      "\tTabs\nand\r\nnew-lines\t",
+      "--Leading, and trailing (punctuation)!!",
+      "café MiXeD123abc 0x1F",
+      "", null, "x", "!")
+    val df = texts.toDF("t")
+    // the reference: the same normalization as a regex, the way the
+    // DuckDB oracle SQL writes it
+    val ref = filter(split(lower(regexp_replace(col("t"), "[^a-zA-Z0-9]+", " ")), " "),
+      w => length(w) > 0)
+    // lower BEFORE extracting turns İ and the Kelvin sign into ASCII
+    // letters: the texts above must tell the two forms apart
+    val lowerFirst = regexp_extract_all(lower(col("t")), lit("[a-z0-9]+"), lit(0))
+    val got = df.select(Decontaminate.wordsOf(col("t")), ref, lowerFirst).collect()
+      .map(r => (Option(r.getSeq[String](0)), Option(r.getSeq[String](1)),
+        Option(r.getSeq[String](2))))
+    got.zip(texts).foreach { case ((w, r, _), t) => assert(w == r, s"text: $t") }
+    assert(got.take(2).forall { case (w, _, lf) => w != lf },
+      "the İ / Kelvin cases no longer separate the lower-first form")
+    assert(got.map(_._1).toSeq == Seq(
+      Some(Seq("stanbul", "and", "a", "b")), Some(Seq("value", "5")),
+      Some(Seq("fullwidth", "b2")), Some(Seq("alpha", "beta", "gamma")),
+      Some(Seq("tabs", "and", "new", "lines")),
+      Some(Seq("leading", "and", "trailing", "punctuation")),
+      Some(Seq("caf", "mixed123abc", "0x1f")),
+      Some(Seq()), None, Some(Seq("x")), Some(Seq())))
+  }
+
+  test("marks rule: sorted runs == brute-force min-id keeper, full and served in-shard tier") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val n = 3
+    val cases = Seq(
+      // a gram repeated inside one doc only: never marked
+      "within-doc repeat" -> Seq((1L, "r1 r2 r3 r1 r2 r3 r1")),
+      // a gram in three docs: the min id keeps, the other two are marked
+      "three docs" -> Seq((5L, "t1 t2 t3 five"), (3L, "three t1 t2 t3"),
+        (9L, "nine t1 t2 t3")),
+      // ids out of order and negative: -10 keeps one gram, 2 the other
+      "negative ids" -> Seq((7L, "n1 n2 n3 n4"), (-4L, "n1 n2 n3 x"),
+        (-10L, "y n1 n2 n3"), (2L, "n2 n3 n4 z")),
+      "empty input" -> Seq.empty[(Long, String)])
+    val expectedIds = Map("within-doc repeat" -> Set.empty[Long],
+      "three docs" -> Set(5L, 9L), "negative ids" -> Set(7L, -4L),
+      "empty input" -> Set.empty[Long])
+    val table = s"gi_marks_${System.nanoTime()}"
+    Decontaminate.writeGramIndex(Seq((0L, "zz1 zz2 zz3 zz4")).toDF("doc_id", "text"),
+      "text", table, n = n)
+    val idx = Decontaminate.openGramIndex(spark, table)
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("id", "gh").collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    cases.foreach { case (name, rows) =>
+      val docs = rows.toDF("doc_id", "text")
+      // brute force over each doc's gram hashes: nd >= 2, id != keeper
+      val grams = docs.select(col("doc_id"), Decontaminate.gramHashes(col("text"), n))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet)
+      val owners = grams.toSeq.flatMap { case (id, gs) => gs.map(_ -> id) }
+        .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+      val expected = (for ((gh, ids) <- owners.toSeq; if ids.size >= 2;
+                           id <- ids; if id != ids.min) yield id -> gh).toSet
+      assert(expected.map(_._1) == expectedIds(name), name)
+      val full = Decontaminate.runMarks(docs.select(col("doc_id").as("id"),
+        explode(array_distinct(Decontaminate.gramHashes(col("text"), n))).as("gh")))
+      assert(pairs(full) == expected, name)
+      // no doc shares a gram with the index: every mark is in-shard
+      val w = docs.select(col("doc_id").as("id"), Decontaminate.wordsOf(col("text")).as("w"))
+      assert(pairs(Decontaminate.servedMarked(w, idx)) == expected, s"$name (served)")
+    }
+    Seq(table, s"${table}_params", s"${table}_epochs")
+      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
+  }
+
   test("removeDupSpans: keeper keeps the run, the copy loses exactly it, a clone empties") {
     import spark.implicits._
     val docs = Seq(
@@ -410,7 +489,10 @@ class DecontaminateSpec extends AnyFunSuite {
     val shard = Seq(
       (10L, "Intro: Corp BOILER plate, one two — Outro stays!"),
       (13L, untouched),
-      (14L, corpusBoiler.trim)                          // full clone of indexed text
+      (14L, corpusBoiler.trim),                         // full clone of indexed text
+      // non-ASCII before the cut: é and İ split words, the emoji is a
+      // surrogate pair (one codepoint, two UTF-16 units)
+      (15L, "Héllo \uD83D\uDE00 İzmir: alpha BETA gamma, tail \uD83D\uDE00 end.")
     ).toDF("doc_id", "text")
     val out = Decontaminate
       .removeDupSpansServedPreserving(shard, "doc_id", "text", idx)
@@ -424,6 +506,10 @@ class DecontaminateSpec extends AnyFunSuite {
     assert(out(13L)._2 == 0 && out(13L)._3 == untouched, out(13L).toString)
     // a full clone of indexed content still empties (degenerate case)
     assert(out(14L)._2 == out(14L)._1 && out(14L)._3 == "", out(14L).toString)
+    // codepoint slices: the kept words h, llo, zmir, tail, end keep the
+    // original text around them, emoji and dotted capital I included
+    assert(out(15L) == ((8, 3, "Héllo \uD83D\uDE00 İzmir: tail \uD83D\uDE00 end.")),
+      out(15L).toString)
 
     // invariant on a real corpus split: per-doc n_words/n_removed equal
     // the normalized form's, and normalizing the preserved text yields
@@ -600,6 +686,14 @@ class DecontaminateSpec extends AnyFunSuite {
       assert(!nodes.exists(_.startsWith("Window ")), s"$form\n" + p.take(4000))
       assert("""posexplode\(w#\d+\)""".r.findFirstIn(p).isEmpty,
         s"$form explodes the word array\n" + p.take(4000))
+      if (form == "removeDupSpans") {
+        // the gram side marks (id, gh) pairs: no positional gram rows, and
+        // one gh shuffle (the sorted runs), not an aggregate plus a join
+        assert(!p.contains("posexplode"), s"$form\n" + p.take(4000))
+        val finalPlan = p.split("== Initial Plan ==")(0)
+        assert("""Exchange hashpartitioning\(gh#""".r.findAllIn(finalPlan).size <= 1,
+          s"$form shuffles by gh more than once\n" + p.take(4000))
+      }
     }
     Seq(table, s"${table}_params", s"${table}_epochs")
       .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
